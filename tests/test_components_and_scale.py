@@ -11,6 +11,27 @@ from twitter_social_triangle_mapreduce_spark.sources.io import edges_from_events
 from conftest import SF_SMOKE, edges_df
 
 
+CHAIN = [(i, i + 1) for i in range(1, 20)]  # a 20-vertex path
+
+
+def _oracle_rows(rows, sql_of) -> list[tuple]:
+    """Run an unrolled component oracle in DuckDB over inline edges."""
+    import duckdb
+
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE TABLE e (src BIGINT, dst BIGINT)")
+        if rows:
+            con.executemany("INSERT INTO e VALUES (?, ?)", rows)
+        return sorted(con.execute(sql_of("SELECT src, dst FROM e")).fetchall())
+    finally:
+        con.close()
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.collect()))
+
+
 def test_connected_components_golden(spark):
     # two components {1,2,3,4} (via undirected edges) and {10,11}
     e = edges_df(spark, [(1, 2), (3, 2), (4, 3), (11, 10)])
@@ -33,17 +54,86 @@ def test_connected_components_self_loop_and_dups(spark):
 def test_reliable_checkpoint_mode_identical_results(spark, tmp_path):
     """``reliable=True`` (fault-tolerant rdd checkpoints — the production
     setting for long iterative jobs) must change only durability, never
-    results."""
+    results — also on a 20-vertex path the 8-round bound cuts short,
+    where the frontier probe on each checkpoint never reads empty."""
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    e = edges_from_events(spark, SF_SMOKE)
-    base = sorted(map(tuple, components.connected_components(e).collect()))
-    rel = sorted(
-        map(tuple, components.connected_components(e, reliable=True).collect())
+    graphs = ((edges_from_events(spark, SF_SMOKE), 3), (edges_df(spark, CHAIN), 2))
+    for e, k in graphs:
+        assert _rows(components.connected_components(e)) == _rows(
+            components.connected_components(e, reliable=True)
+        )
+        assert _rows(components.kcore(e, k=k)) == _rows(
+            components.kcore(e, k=k, reliable=True)
+        )
+
+
+def test_cc_early_exit_never_cuts_an_unconverged_chain(spark):
+    """A path longer than the round bound has not converged after 8
+    rounds: every round changes a label, so early exit must not fire and
+    the rows must equal the naive unrolled oracle's row for row (vertex v
+    ends with label max(1, v - 8))."""
+    got = _rows(components.connected_components(edges_df(spark, CHAIN), 8))
+    want = _oracle_rows(
+        CHAIN, lambda e: components.connected_components_oracle_sql(e, 8)
     )
-    assert base == rel
-    kb = sorted(map(tuple, components.kcore(e).collect()))
-    kr = sorted(map(tuple, components.kcore(e, reliable=True).collect()))
-    assert kb == kr
+    assert got == want
+    assert got[-1] == (20, 12)
+
+
+def test_kcore_early_exit_never_cuts_an_unconverged_peel(spark):
+    """2-core peeling of a path removes its two ends each round, so after
+    8 rounds only the middle survives — row-for-row the unrolled oracle's
+    answer, which no premature stop can give."""
+    got = _rows(components.kcore(edges_df(spark, CHAIN), k=2, iterations=8))
+    want = _oracle_rows(
+        CHAIN, lambda e: components.kcore_oracle_sql(e, k=2, iterations=8)
+    )
+    assert got == want == [(v,) for v in range(9, 13)]
+
+
+def test_components_zero_rounds_and_empty_graph(spark):
+    """``iterations=0`` returns the initial state (own labels, every
+    vertex alive) and an empty edge set gives an empty result, both as
+    the oracles do."""
+    rows = [(1, 2), (3, 3)]
+    e = edges_df(spark, rows)
+    assert _rows(components.connected_components(e, 0)) == _oracle_rows(
+        rows, lambda s: components.connected_components_oracle_sql(s, 0)
+    ) == [(1, 1), (2, 2), (3, 3)]
+    assert _rows(components.kcore(e, iterations=0)) == _oracle_rows(
+        rows, lambda s: components.kcore_oracle_sql(s, iterations=0)
+    ) == [(1,), (2,), (3,)]
+    empty = edges_df(spark, [])
+    assert _rows(components.connected_components(empty)) == _oracle_rows(
+        [], components.connected_components_oracle_sql
+    ) == []
+    assert _rows(components.kcore(empty)) == _oracle_rows(
+        [], components.kcore_oracle_sql
+    ) == []
+
+
+def test_cc_stops_at_its_fixed_point(spark):
+    """Runtime pin: 1-2-3 plus 10-11 is labeled after 2 rounds and the
+    3rd finds an empty frontier, so the default 8-round bound must run
+    no more jobs than a 3-round bound — a slip back to fixed rounds runs
+    five rounds more and fails here."""
+    e = edges_df(spark, [(1, 2), (2, 3), (10, 11)])
+    sc = spark.sparkContext
+
+    def jobs_for(iterations: int, tag: str) -> tuple[int, list]:
+        sc.setJobGroup(tag, "cc round probe")
+        try:
+            rows = _rows(components.connected_components(e, iterations))
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(tag)), rows
+
+    j2, r2 = jobs_for(2, "cc_rounds_2")
+    j3, r3 = jobs_for(3, "cc_rounds_3")
+    j8, r8 = jobs_for(components.CC_ITERATIONS, "cc_rounds_8")
+    assert r2 == r3 == r8 == [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)]
+    assert j2 < j3  # a round costs jobs, so the pin can see one
+    assert j8 <= j3
 
 
 def test_bfs_levels_golden(spark):

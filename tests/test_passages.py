@@ -460,3 +460,16 @@ def test_packed_canonical_parity_and_guard(spark):
     ).select("doc_id", "start", F.lit(bytearray(16)).alias("wh"))
     with pytest.raises(Exception, match="packed-canonical bounds"):
         bad.select(passages._packed_occurrence().alias("p")).collect()
+
+
+def test_packed_canonical_guard_rejects_negative_start(spark):
+    """A negative start would pack onto another document's occurrence
+    ((1, -1) packs equal to (0, 2^24 - 1)) and elect a wrong canonical,
+    so the guard must raise instead of packing."""
+    import pytest
+
+    bad = spark.createDataFrame([(1, -1)], "doc_id long, start long")
+    with pytest.raises(Exception, match="packed-canonical bounds"):
+        bad.select(passages._packed_occurrence().alias("p")).collect()
+    ok = spark.createDataFrame([(1, 0)], "doc_id long, start long")
+    assert ok.select(passages._packed_occurrence()).collect()[0][0] == 1 << 24

@@ -1317,3 +1317,28 @@ def test_resolve_bits_memo_shares_across_independent_loads(spark, tmp_path):
     assert j1 >= 1
     b2, j2 = jobs("rbload_2", lambda: similarity._resolve_bits(None, load()))
     assert (b2, j2) == (b1, 0)
+
+
+def test_fast_path_cell_assignment_with_no_centroids_under_ansi(spark):
+    """Non-empty embeddings but an EMPTY centroid set — a trained
+    codebook with no rows, or no vec_id below ``k_cells`` for the
+    stand-in — leave the broadcast centroid array empty. Under ANSI the
+    nearest-cell lookup must give NULL (no cell, so no pair), not fail
+    with an out-of-bounds array index."""
+    key = "spark.sql.ansi.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        planted = _planted(spark)
+        no_codebook = spark.createDataFrame(
+            [], "cid long, centroid array<float>"
+        )
+        assert similarity.semantic_dedup_pairs(
+            planted, dims=DIMS, centroids=no_codebook
+        ).collect() == []
+        shifted = planted.withColumn(
+            "vec_id", F.col("vec_id") + similarity.IVF_CELLS
+        )
+        assert similarity.semantic_dedup_pairs(shifted, dims=DIMS).collect() == []
+    finally:
+        spark.conf.set(key, prev)

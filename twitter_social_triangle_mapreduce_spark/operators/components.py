@@ -1,22 +1,26 @@
 """Iterative graph algorithms over the canonical edge list: connected
-components (min-label propagation) and PageRank. These extend the
-reference's graph surface with the classic iterative workloads a
-graph-analytics engine needs.
+components (min-label propagation), k-core peeling, BFS levels and
+PageRank. These extend the reference's graph surface with the classic
+iterative workloads a graph-analytics engine needs.
 
-Both run a FIXED number of synchronous iterations so results are exactly
-reproducible: connected components is pure integer min-propagation (its
-DuckDB oracle unrolls the same iterations and hash-matches bit-for-bit);
-PageRank is float-valued and registered rows-only.
+Connected components and k-core run AT MOST N synchronous rounds and stop
+at the fixed point; the rows are the same as N rounds would give, because
+a round that changes nothing leaves every later round unchanged. Both are
+semi-naive in the style of Pregelix: after the first round only the
+*active* vertices (labels that changed, vertices just peeled) send
+messages, and the loop ends as soon as none is active. Both are
+integer-exact, so their DuckDB oracles unroll all N rounds naively and
+still hash-match. BFS and PageRank run a FIXED number of rounds; PageRank
+is float-valued and registered rows-only.
 
-Scale notes: each iteration is one shuffle (join on the edge key + min/sum
-aggregate). At cluster scale, checkpoint every few iterations to truncate
-lineage (``df.localCheckpoint()``) and persist the (static) symmetrized
-edge list once — noted inline.
+Scale notes: each round is one shuffle (join on the edge key + min/sum
+aggregate), with lineage truncated every round (``df.localCheckpoint()``)
+and the (static) symmetrized edge list checkpointed once.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 CC_ITERATIONS = 8
@@ -24,7 +28,7 @@ PR_ITERATIONS = 5
 PR_DAMPING = 0.85
 
 
-def _truncate(df: DataFrame, reliable: bool) -> DataFrame:
+def _truncate(df: DataFrame, reliable: bool, eager: bool = False) -> DataFrame:
     """Cut lineage between iterations. ``localCheckpoint`` (default)
     stores blocks on executors — fast, but lost with an executor, which on
     a 1000-executor cluster means restarting the whole job after one
@@ -32,8 +36,24 @@ def _truncate(df: DataFrame, reliable: bool) -> DataFrame:
     ``spark.sparkContext.setCheckpointDir`` pointing at HDFS/S3) — the
     production setting for long iterative jobs; results are identical."""
     return (
-        df.checkpoint(eager=False) if reliable else df.localCheckpoint(eager=False)
+        df.checkpoint(eager=eager)
+        if reliable
+        else df.localCheckpoint(eager=eager)
     )
+
+
+def _checkpoint_any(
+    df: DataFrame, flag: str, reliable: bool
+) -> tuple[DataFrame, bool]:
+    """Checkpoint ``df`` eagerly and say whether any of its rows has
+    ``flag`` set — the convergence probe of the semi-naive loops. The
+    count is an observed metric of the checkpoint's own job, so the probe
+    costs no extra job and never re-scans the inputs."""
+    seen = Observation()
+    ck = _truncate(
+        df.observe(seen, F.count_if(F.col(flag)).alias("n")), reliable, eager=True
+    )
+    return ck, seen.get["n"] > 0
 
 
 def _symmetric(edges: DataFrame) -> DataFrame:
@@ -56,47 +76,68 @@ def connected_components(
 ) -> DataFrame:
     """(v, component) — label propagation: every vertex starts labeled with
     its own id; each round takes the min of its label and its neighbors'
-    labels over the undirected edge set. With a fixed round count the
-    result is deterministic whether or not converged (integers only, so
-    the unrolled SQL oracle matches exactly).
+    labels over the undirected edge set. At most ``iterations`` rounds;
+    stops at the fixed point; same rows as ``iterations`` rounds, so the
+    result is deterministic whether or not it converged (integers only,
+    so the unrolled SQL oracle matches exactly).
 
-    Per round: one join (labels × edges) + one min-aggregate + one outer
-    join back. The label relation is locally checkpointed every round —
-    without lineage truncation each round doubles the plan (labels feeds
-    two operators), giving an exponentially-growing tree (measured: 766
-    exchanges at 8 rounds un-checkpointed vs ~3 per round with); this is
-    the standard iterative-algorithm pattern on Spark. ``reliable``
-    switches to fault-tolerant checkpoints (see ``_truncate``).
+    Semi-naive (Pregelix's active vertices): a neighbor whose label did
+    not change last round already sent that label, so from round 2 on
+    only the FRONTIER — the labels that changed last round — is joined
+    with ``sym``. Each vertex's new label is one min-aggregate over its
+    own label and the labels sent to it, which also flags whether it
+    changed; the loop ends when no label changed. Round 1 needs no join
+    at all: every label is still its vertex's own id, so the labels sent
+    along ``sym`` are its ``src`` ids.
 
-    The initial labels derive from the CHECKPOINTED symmetric relation,
-    not from ``edges`` (optimization round 13, guide §2.4 "don't compute
-    things twice"): every endpoint appears as ``src`` in the symmetric
-    view, so ``sym.src`` distinct is exactly the vertex set — and
+    The label relation is checkpointed every round — without lineage
+    truncation each round doubles the plan (labels feeds two operators),
+    giving an exponentially-growing tree (measured: 766 exchanges at 8
+    rounds un-checkpointed vs ~3 per round with); this is the standard
+    iterative-algorithm pattern on Spark. ``reliable`` switches to
+    fault-tolerant checkpoints (see ``_truncate``). The frontier probe
+    rides on that checkpoint's own job (``_checkpoint_any``).
+
+    Everything derives from the CHECKPOINTED symmetric relation, not from
+    ``edges`` (optimization round 13, guide §2.4 "don't compute things
+    twice"): every endpoint appears as ``src`` (and ``dst``) in the
+    symmetric view, so its vertex set is exactly the graph's — and
     reading it off the checkpoint means the (often expensive — the
     dedup/semantic callers pass a full LSH candidate pipeline) edge
-    derivation runs ONCE, where ``vertices(edges)`` re-derived it a
-    second time (measured: near_dup_clusters 20.6 → ~13 CPU-s at
-    sf0.1)."""
+    derivation runs ONCE."""
     sym = _truncate(_symmetric(edges), reliable)
-    labels = (
-        sym.select(F.col("src").alias("v")).distinct().withColumn("l", F.col("v"))
+    if iterations <= 0:
+        return (
+            sym.select(F.col("src").alias("v"))
+            .distinct()
+            .withColumn("component", F.col("v"))
+        )
+    nbr_min = sym.groupBy(F.col("dst").alias("v")).agg(F.min("src").alias("nl"))
+    labels, active = _checkpoint_any(
+        nbr_min.select(
+            "v",
+            F.least(F.col("v"), F.col("nl")).alias("l"),
+            (F.col("nl") < F.col("v")).alias("changed"),
+        ),
+        "changed",
+        reliable,
     )
-    for _ in range(iterations):
-        nbr_min = (
-            sym.join(labels, sym.src == labels.v, "inner")
-            .groupBy(F.col("dst").alias("v2"))
-            .agg(F.min("l").alias("nl"))
+    for _ in range(iterations - 1):
+        if not active:
+            break
+        frontier = labels.where("changed")
+        sent = frontier.join(sym, frontier.v == sym.src).select(
+            F.col("dst").alias("v"), "l", F.lit(None).cast("long").alias("own")
         )
-        labels = (
-            labels.join(nbr_min, labels.v == F.col("v2"), "left_outer")
-            .select(
-                "v",
-                F.least(
-                    F.col("l"), F.coalesce(F.col("nl"), F.col("l"))
-                ).alias("l"),
-            )
+        labels, active = _checkpoint_any(
+            labels.select("v", "l", F.col("l").alias("own"))
+            .unionByName(sent)
+            .groupBy("v")
+            .agg(F.min("l").alias("l"), F.max("own").alias("own"))
+            .select("v", "l", (F.col("l") < F.col("own")).alias("changed")),
+            "changed",
+            reliable,
         )
-        labels = _truncate(labels, reliable)
     return labels.select("v", F.col("l").alias("component"))
 
 
@@ -143,28 +184,52 @@ def kcore(
 ) -> DataFrame:
     """(v,) — vertices surviving ``iterations`` rounds of k-core peeling
     on the undirected support graph: each round removes vertices with
-    fewer than ``k`` distinct remaining neighbors. Fixed rounds → integer-
-    deterministic whether or not converged (unrolled SQL oracle matches
-    exactly). Same per-round shape as connected components: one join + one
-    aggregate + a semi-join, lineage truncated per round."""
+    fewer than ``k`` distinct remaining neighbors (and, whatever ``k``,
+    vertices with none). At most ``iterations`` rounds; stops after a
+    round that removes no vertex; same rows as ``iterations`` rounds, so
+    the result is integer-deterministic whether or not it converged
+    (the unrolled SQL oracle matches exactly).
+
+    Semi-naive: the first round's degrees are one aggregate over
+    ``sym``; after that only the vertices just peeled send messages,
+    each taking one off its surviving neighbors' degrees (sum-aggregate
+    over the survivors' degrees and the messages), instead of re-joining
+    all of ``sym`` with the survivors on both ends every round. The state
+    relation is checkpointed per round with the same frontier probe as
+    connected components."""
+    if iterations <= 0:
+        return vertices(edges)
     sym = _truncate(
         _symmetric(edges).where(F.col("src") != F.col("dst")), reliable
     )
-    alive = vertices(edges)
-    for _ in range(iterations):
-        deg = (
-            sym.join(alive.withColumnRenamed("v", "s"), sym.src == F.col("s"))
-            .join(alive.withColumnRenamed("v", "d"), sym.dst == F.col("d"))
-            .groupBy(F.col("s").alias("v2"))
-            .agg(F.count(F.lit(1)).alias("deg"))
+    # a vertex whose neighbors are all gone has no degree row in the
+    # naive round, so it goes even when k <= 0
+    floor = max(k, 1)
+    deg = sym.groupBy(F.col("src").alias("v")).agg(F.count(F.lit(1)).alias("deg"))
+    state, peeling = _checkpoint_any(
+        deg.withColumn("drop", F.col("deg") < floor), "drop", reliable
+    )
+    for _ in range(iterations - 1):
+        if not peeling:
+            break
+        peeled = state.where("drop")
+        lost = peeled.join(sym, peeled.v == sym.src).select(
+            F.col("dst").alias("v"),
+            F.lit(-1).cast("long").alias("deg"),
+            F.lit(0).alias("alive"),
         )
-        alive = _truncate(
-            alive.join(
-                deg.where(F.col("deg") >= k), alive.v == F.col("v2"), "left_semi"
-            ),
+        state, peeling = _checkpoint_any(
+            state.where(~F.col("drop"))
+            .select("v", "deg", F.lit(1).alias("alive"))
+            .unionByName(lost)
+            .groupBy("v")
+            .agg(F.sum("deg").alias("deg"), F.max("alive").alias("alive"))
+            .where(F.col("alive") == 1)
+            .select("v", "deg", (F.col("deg") < floor).alias("drop")),
+            "drop",
             reliable,
         )
-    return alive.select("v")
+    return state.where(~F.col("drop")).select("v")
 
 
 def kcore_oracle_sql(

@@ -266,7 +266,7 @@ def _packed_occurrence():
     place = 1 << PASSAGE_PACK_START_BITS
     return F.expr(
         f"CASE WHEN doc_id >= 0 AND doc_id < {1 << (63 - PASSAGE_PACK_START_BITS)}"
-        f" AND start < {place}"
+        f" AND start >= 0 AND start < {place}"
         f" THEN doc_id * {place} + start"
         f" ELSE CAST(raise_error(concat('passages: packed-canonical bounds"
         f" exceeded (doc_id ', CAST(doc_id AS STRING), ', start ',"

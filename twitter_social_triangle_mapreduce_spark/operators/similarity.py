@@ -1057,7 +1057,7 @@ def semantic_dedup_pairs(
                 "vec_id",
                 "embedding",
                 _norm("embedding").alias("nrm"),
-                _ranked_arr_expr().getItem(0).getField("cid").alias("cell"),
+                F.get(_ranked_arr_expr(), 0).getField("cid").alias("cell"),
             )
             .withColumn("sig", sig)
             .repartition(F.col("cell"), F.col("sig"))
@@ -1181,8 +1181,9 @@ def semantic_dedup_clusters(
 ) -> DataFrame:
     """(vec_id, cluster_id, is_canonical) — the embedding-tier dedup
     DELIVERABLE (round-3 verdict item 6): cell-local thresholded pairs
-    (``semantic_dedup_pairs``) closed transitively by the same fixed-
-    round min-label propagation the MinHash deliverable uses, with the
+    (``semantic_dedup_pairs``) closed transitively by the same bounded,
+    early-exit min-label propagation the MinHash deliverable uses (at
+    most ``NEAR_DUP_CC_ROUNDS`` rounds, same rows as that many), with the
     min vec_id of each cluster elected canonical and singletons keeping
     their own id. Downstream, a training pipeline drops
     ``is_canonical = 0`` rows — semantically-redundant samples — the
