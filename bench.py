@@ -239,6 +239,40 @@ def plan_digest(df) -> str:
     return hashlib.md5(s.encode()).hexdigest()[:8]
 
 
+def _capstone(spark_, sf_dir_, cut: bool, semantic: bool = False):
+    import shutil
+    import tempfile
+
+    from twitter_social_triangle_mapreduce_spark.operators.corpus import (
+        prepare_training_corpus,
+    )
+    from twitter_social_triangle_mapreduce_spark.sources.io import load_table
+
+    docs = load_table(spark_, sf_dir_, "documents")
+    ev = docs.where("doc_id % 17 = 0")
+    emb = load_table(spark_, sf_dir_, "embeddings") if semantic else None
+    out = tempfile.mkdtemp(prefix="bench_shards_")
+    try:
+        return prepare_training_corpus(
+            docs, ev, out, cut_passages=cut, embeddings=emb
+        )
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
+def bench_queries() -> dict:
+    """Every registered query plus the three capstone entries, each a
+    ``(spark, sf_dir) -> DataFrame`` callable (a capstone writes its
+    training shards to a temp dir at call time and removes them)."""
+    qs = dict(registry.all_queries(include_extra=True))
+    qs["prepare_training_corpus"] = lambda s, d: _capstone(s, d, False)
+    qs["prepare_training_corpus_cut"] = lambda s, d: _capstone(s, d, True)
+    qs["prepare_training_corpus_semantic"] = lambda s, d: _capstone(
+        s, d, False, semantic=True
+    )
+    return qs
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -297,38 +331,7 @@ def main() -> None:
 
     # ---- extension section (timer wraps fn(): the capstone's call
     # eagerly writes its training shards) ----
-    import shutil
-    import tempfile
-
-    def _capstone(spark_, sf_dir_, cut: bool, semantic: bool = False):
-        from twitter_social_triangle_mapreduce_spark.operators.corpus import (
-            prepare_training_corpus,
-        )
-        from twitter_social_triangle_mapreduce_spark.sources.io import (
-            load_table,
-        )
-
-        docs = load_table(spark_, sf_dir_, "documents")
-        ev = docs.where("doc_id % 17 = 0")
-        emb = load_table(spark_, sf_dir_, "embeddings") if semantic else None
-        out = tempfile.mkdtemp(prefix="bench_shards_")
-        try:
-            return prepare_training_corpus(
-                docs, ev, out, cut_passages=cut, embeddings=emb
-            )
-        finally:
-            shutil.rmtree(out, ignore_errors=True)
-
-    ext_queries = dict(registry.all_queries(include_extra=True))
-    ext_queries["prepare_training_corpus"] = (
-        lambda s, d: _capstone(s, d, False)
-    )
-    ext_queries["prepare_training_corpus_cut"] = (
-        lambda s, d: _capstone(s, d, True)
-    )
-    ext_queries["prepare_training_corpus_semantic"] = (
-        lambda s, d: _capstone(s, d, False, semantic=True)
-    )
+    ext_queries = bench_queries()
     per_ext: dict[str, float] = {}
     plans_ext: dict[str, str] = {}
     shuffle_ext: dict[str, dict[str, float]] = {}

@@ -5,8 +5,9 @@ cost grows with plan depth (Catalyst analysis + codegen), while the
 Arrow-batched pandas arm is flat in merge count. This probe times BOTH
 arms at a ladder of merge counts over the sf0.01 documents table and
 prints one JSON line per point — the measured crossover sets
-``bpe.SQL_MAX_MERGES_DEFAULT`` (the auto-gate threshold), the same
-measure-don't-guess rule the trainer's localMaxWords gate followed.
+``bpe.SQL_MAX_MERGES`` (the auto-gate threshold), the same
+measure-don't-guess rule the trainer's ``bpe.LOCAL_MAX_WORDS`` gate
+followed.
 
 Merge tables beyond the trained ladder are synthetic ranked pairs over
 the testdata alphabet — the ENCODER's cost is per-merge plan depth /
@@ -101,13 +102,15 @@ def main() -> None:
         sql_s = sql_tok = None
         if n <= SQL_ARM_MAX:
             # force the SQL arm regardless of the gate (probe both)
-            spark.conf.set(bpe.SQL_MAX_MERGES_CONF, str(10**9))
-            t0 = time.time()
-            sql_tok = bpe.bpe_encode(docs, merges).agg(
-                {"n_tokens": "sum"}
-            ).collect()[0][0]
-            sql_s = time.time() - t0
-            spark.conf.unset(bpe.SQL_MAX_MERGES_CONF)
+            gate, bpe.SQL_MAX_MERGES = bpe.SQL_MAX_MERGES, 10**9
+            try:
+                t0 = time.time()
+                sql_tok = bpe.bpe_encode(docs, merges).agg(
+                    {"n_tokens": "sum"}
+                ).collect()[0][0]
+                sql_s = time.time() - t0
+            finally:
+                bpe.SQL_MAX_MERGES = gate
         t0 = time.time()
         pd_tok = bpe.bpe_encode_pandas(docs, merges).agg(
             {"n_tokens": "sum"}

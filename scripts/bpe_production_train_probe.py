@@ -14,7 +14,7 @@ corpus through the same decomposition ``train_bpe_merges(mode=
 Corpus: the scale probe's deterministic hash-drawn generator (word
 text = base-26 letters of the vocab id). Memory is reported as the
 driver process's peak RSS delta — the loop's index structures are the
-sizing question for the localMaxWords gate.
+sizing question for the ``bpe.LOCAL_MAX_WORDS`` gate.
 
 Usage: python scripts/bpe_production_train_probe.py \
     [--n-words=10000000] [--vocab=1300000] [--merges=32000]

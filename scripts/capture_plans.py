@@ -1,14 +1,14 @@
 #!/usr/bin/env python
-"""Capture `.explain("formatted")` for every declared query plus the
-bench extension entries into plans/r12/<query>_<tag>.txt.
+"""Capture `.explain("formatted")` for every declared query into
+plans/<out_dir>/<query>_<tag>.txt.
 
-Usage: python scripts/capture_plans_r12.py <tag> [sf_dir]
-  tag: "before" / "after" (file suffix)
+Usage: python scripts/capture_plans.py <out_dir> <tag> <sf_dir>
+  out_dir: directory under plans/ (e.g. r14)
+  tag:     "before" / "after" (file suffix)
 
-The judge cannot run Spark; these files are the evidence base for every
-plan claim in OPTIMIZATION_r12.md. Volatile ids are left as-is (the
-files are for human/judge reading; digest comparison uses bench.py's
-normalizer)."""
+These files are the evidence base for the plan claims in the
+OPTIMIZATION_r*.md records. Volatile ids are left as-is (the files are
+for reading; digest comparison uses bench.py's normalizer)."""
 
 from __future__ import annotations
 
@@ -23,9 +23,10 @@ from twitter_social_triangle_mapreduce_spark.session import get_spark  # noqa: E
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    out_dir = os.path.join(REPO, "plans", "r12")
+    if len(sys.argv) != 4:
+        sys.exit(__doc__)
+    out_dir = os.path.join(REPO, "plans", sys.argv[1])
+    tag, sf_dir = sys.argv[2], sys.argv[3]
     os.makedirs(out_dir, exist_ok=True)
 
     spark = get_spark(app_name="tstm-capture-plans")

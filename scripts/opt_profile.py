@@ -5,8 +5,9 @@ group, then attribute jobs/stages via the UI REST API and print a
 per-query breakdown — job count, stage count, task count, executor run
 time, shuffle bytes, and the slowest stages with their call sites.
 
-Usage: python scripts/opt_profile_r12.py [sf_dir] [query ...]
-(defaults: /root/testdata/sf0.1, the 12 headline + 7 extension entries)
+Usage: python scripts/opt_profile.py <out_dir> <sf_dir> [query ...]
+  out_dir: directory under plans/ that receives profile.json (e.g. r14)
+  query:   defaults to the 12 headline + 7 extension entries
 """
 
 from __future__ import annotations
@@ -20,10 +21,9 @@ import urllib.request
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from twitter_social_triangle_mapreduce_spark import registry  # noqa: E402
 from twitter_social_triangle_mapreduce_spark.session import get_spark  # noqa: E402
 
-import bench  # noqa: E402  (HEADLINE/EXTENSION lists + capstone lambdas)
+import bench  # noqa: E402  (HEADLINE/EXTENSION lists + capstone entries)
 
 
 def _get(base: str, path: str):
@@ -32,8 +32,10 @@ def _get(base: str, path: str):
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    names = sys.argv[2:] or (bench.HEADLINE + bench.EXTENSION)
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    out_dir, sf_dir = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:] or (bench.HEADLINE + bench.EXTENSION)
 
     spark = get_spark(
         app_name="tstm-opt-profile",
@@ -47,36 +49,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
 
-    queries = dict(registry.all_queries(include_extra=True))
-    # capstone lambdas reconstructed here (bench defines them inside
-    # main()); keep in sync with bench.py
-    import shutil
-    import tempfile
-
-    def _capstone(spark_, sf_dir_, cut: bool, semantic: bool = False):
-        from twitter_social_triangle_mapreduce_spark.operators.corpus import (
-            prepare_training_corpus,
-        )
-        from twitter_social_triangle_mapreduce_spark.sources.io import (
-            load_table,
-        )
-
-        docs = load_table(spark_, sf_dir_, "documents")
-        ev = docs.where("doc_id % 17 = 0")
-        emb = load_table(spark_, sf_dir_, "embeddings") if semantic else None
-        out = tempfile.mkdtemp(prefix="prof_shards_")
-        try:
-            return prepare_training_corpus(
-                docs, ev, out, cut_passages=cut, embeddings=emb
-            )
-        finally:
-            shutil.rmtree(out, ignore_errors=True)
-
-    queries["prepare_training_corpus"] = lambda s, d: _capstone(s, d, False)
-    queries["prepare_training_corpus_cut"] = lambda s, d: _capstone(s, d, True)
-    queries["prepare_training_corpus_semantic"] = lambda s, d: _capstone(
-        s, d, False, semantic=True
-    )
+    queries = bench.bench_queries()
 
     base = sc.uiWebUrl
     app_id = _get(base, "/api/v1/applications")[0]["id"]
@@ -149,7 +122,7 @@ def main() -> None:
             flush=True,
         )
 
-    out = os.path.join(REPO, "plans", "r12", "profile.json")
+    out = os.path.join(REPO, "plans", out_dir, "profile.json")
     os.makedirs(os.path.dirname(out), exist_ok=True)
     with open(out, "w") as f:
         json.dump(report, f, indent=1)

@@ -107,22 +107,20 @@ def test_local_and_distributed_arms_bit_identical(spark):
     assert loc == dist
 
 
-def test_local_arm_matches_pure_reference_and_gate_is_conf_driven(spark):
+def test_local_arm_matches_pure_reference_and_gate_is_conf_driven(
+    spark, monkeypatch
+):
     """The local arm's incremental pair-count maintenance must equal a
     full per-round recount (the pure reference), and the auto gate must
-    honor spark.graft.bpe.localMaxWords (forcing the distributed arm
-    when the vocabulary exceeds it)."""
+    honor ``bpe.LOCAL_MAX_WORDS`` (taking the distributed arm when the
+    vocabulary exceeds it)."""
     docs = load_table(spark, SF_SMOKE, "documents")
     texts = [r["text"] for r in docs.select("text").collect()]
     want, _ = _ref_train(texts, bpe.BPE_MERGES)
     assert bpe.train_bpe_merges(docs, bpe.BPE_MERGES, mode="local") == want
     # gate: a 0-row threshold pushes auto onto the distributed arm
-    key = bpe.LOCAL_MAX_WORDS_CONF
-    spark.conf.set(key, "0")
-    try:
-        assert bpe.train_bpe_merges(docs, 3) == want[:3]
-    finally:
-        spark.conf.unset(key)
+    monkeypatch.setattr(bpe, "LOCAL_MAX_WORDS", 0)
+    assert bpe.train_bpe_merges(docs, 3) == want[:3]
 
 
 @pytest.mark.slow  # round-13 gate diet: probe-as-test
@@ -205,22 +203,19 @@ def test_empty_and_degenerate_inputs(spark):
     assert merges == want
 
 
-def test_pandas_encoding_arm_equals_sql_arm(spark):
+def test_pandas_encoding_arm_equals_sql_arm(spark, monkeypatch):
     """The Arrow-batched large-vocabulary encoder must produce the
     byte-identical encoding of the nested-fold SQL arm on testdata
-    (the SQL arm is FORCED via the round-8 gate conf — at
+    (the SQL arm is FORCED by raising the round-8 gate constant — at
     ``BPE_MERGES`` the auto-gate would route to pandas and the
     comparison would be vacuous)."""
     docs = load_table(spark, SF_SMOKE, "documents")
     merges = bpe.train_bpe_merges(docs, bpe.BPE_MERGES)
-    spark.conf.set(bpe.SQL_MAX_MERGES_CONF, str(10**9))
-    try:
-        sql_arm = {
-            r["doc_id"]: (r["n_tokens"], r["tokens"])
-            for r in bpe.bpe_encode(docs, merges).collect()
-        }
-    finally:
-        spark.conf.unset(bpe.SQL_MAX_MERGES_CONF)
+    monkeypatch.setattr(bpe, "SQL_MAX_MERGES", 10**9)
+    sql_arm = {
+        r["doc_id"]: (r["n_tokens"], r["tokens"])
+        for r in bpe.bpe_encode(docs, merges).collect()
+    }
     pd_arm = {
         r["doc_id"]: (r["n_tokens"], list(r["tokens"]))
         for r in bpe.bpe_encode_pandas(docs, merges).collect()
@@ -229,9 +224,9 @@ def test_pandas_encoding_arm_equals_sql_arm(spark):
 
 
 @pytest.mark.slow  # perf-routing probe: trains at two merge counts to exercise the gate
-def test_encode_auto_gate_routes_by_merge_count(spark):
+def test_encode_auto_gate_routes_by_merge_count(spark, monkeypatch):
     """Round-8 (r7 verdict item 2): ``bpe_encode`` is two-armed like
-    the trainer — above ``sqlMaxMerges`` it must route to the
+    the trainer — above ``SQL_MAX_MERGES`` it must route to the
     Arrow-batched arm (MapInPandas in the plan), at or below it stay
     in the nested-fold JVM plan (no Python node); and the two arms
     must stay bit-equivalent ACROSS the threshold at a merge count
@@ -253,20 +248,18 @@ def test_encode_auto_gate_routes_by_merge_count(spark):
     def plan_of(df):
         return df._jdf.queryExecution().executedPlan().toString()
 
-    small = synthetic_merges(bpe.SQL_MAX_MERGES_DEFAULT)
+    small = synthetic_merges(bpe.SQL_MAX_MERGES)
     big = synthetic_merges(200)
     assert "MapInPandas" not in plan_of(bpe.bpe_encode(docs, small))
     assert "MapInPandas" in plan_of(bpe.bpe_encode(docs, big))
-    # conf moves the threshold
-    spark.conf.set(bpe.SQL_MAX_MERGES_CONF, "200")
-    try:
+    # the gate constant moves the threshold
+    with monkeypatch.context() as m:
+        m.setattr(bpe, "SQL_MAX_MERGES", 200)
         assert "MapInPandas" not in plan_of(bpe.bpe_encode(docs, big))
         forced_sql = {
             r["doc_id"]: (r["n_tokens"], list(r["tokens"]))
             for r in bpe.bpe_encode(docs, big).collect()
         }
-    finally:
-        spark.conf.unset(bpe.SQL_MAX_MERGES_CONF)
     auto = {
         r["doc_id"]: (r["n_tokens"], list(r["tokens"]))
         for r in bpe.bpe_encode(docs, big).collect()
@@ -342,7 +335,9 @@ def _sweep_encode(text, merges):
     return out
 
 
-def test_pair_driven_encode_matches_sweep_on_adversarial_tables(spark):
+def test_pair_driven_encode_matches_sweep_on_adversarial_tables(
+    spark, monkeypatch
+):
     """Round-9 (r8 verdict item 2): the pandas arm's pair-driven heap
     encode must stay bit-equivalent to the rank-order sweep on the
     shapes where a heap path could plausibly diverge: overlapping
@@ -377,6 +372,7 @@ def test_pair_driven_encode_matches_sweep_on_adversarial_tables(spark):
         # sentinel-absorbing merges produce whole-word tokens
         ("dog dogs do", [(0, "o", "g", 1), (1, "og", bpe.EOW, 1), (2, "d", "og" + bpe.EOW, 1)]),
     ]
+    monkeypatch.setattr(bpe, "SQL_MAX_MERGES", 10**9)  # force the SQL arm
     for text, merges in cases:
         docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
         want = _sweep_encode(text, merges)
@@ -384,11 +380,5 @@ def test_pair_driven_encode_matches_sweep_on_adversarial_tables(spark):
             bpe.bpe_encode_pandas(docs, merges).collect()[0]["tokens"]
         )
         assert got_pd == want, (text, merges, got_pd, want)
-        spark.conf.set(bpe.SQL_MAX_MERGES_CONF, str(10**9))
-        try:
-            got_sql = list(
-                bpe.bpe_encode(docs, merges).collect()[0]["tokens"]
-            )
-        finally:
-            spark.conf.unset(bpe.SQL_MAX_MERGES_CONF)
+        got_sql = list(bpe.bpe_encode(docs, merges).collect()[0]["tokens"])
         assert got_sql == want, (text, merges, got_sql, want)

@@ -419,10 +419,9 @@ def test_registered_passage_width_env_knob(spark, monkeypatch):
 
 def test_packed_canonical_parity_and_guard(spark):
     """Round 13: the packed-BIGINT canonical encoding (HashAggregate +
-    narrower exchange) elects exactly the same non-canonical set as the
-    struct arm, the conf escape hatch restores the struct plan, and an
-    occurrence outside the documented pack bounds fails LOUDLY instead
-    of electing a wrong canonical."""
+    narrower exchange) elects the lexicographic (doc_id, start)
+    canonical, and an occurrence outside the documented pack bounds
+    fails LOUDLY instead of electing a wrong canonical."""
     import pytest
 
     rows = [
@@ -432,21 +431,10 @@ def test_packed_canonical_parity_and_guard(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     packed = sorted(map(tuple, passages.passage_cut_spans(docs).collect()))
-    spark.conf.set(passages.PACKED_CANON_CONF, "struct")
-    try:
-        struct = sorted(
-            map(tuple, passages.passage_cut_spans(docs).collect())
-        )
-        plan = (
-            passages.passage_cut_spans(docs)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "SortAggregate" in plan  # struct arm really falls back
-    finally:
-        spark.conf.unset(passages.PACKED_CANON_CONF)
-    assert packed == struct and packed  # non-empty: dup really planted
+    # the three shared windows start at 3, 4, 5 in doc 3 (the smallest
+    # doc_id, so canonical despite the larger start) and at 1, 2, 3 in
+    # docs 7 and 11, whose cut windows [1,8], [2,9], [3,10] merge
+    assert packed == [(7, 1, 10), (11, 1, 10)]
     plan = (
         passages.passage_cut_spans(docs)
         ._jdf.queryExecution()

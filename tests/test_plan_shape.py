@@ -212,10 +212,6 @@ def test_ordered_semi_reduction_only_on_shuffle_arm(spark):
     on the SHUFFLE_HASH arm (on the broadcast arm the wedge side never
     exchanges, so the filter is pure overhead — and the small-scale plan
     stays byte-identical to round 3). Value identical on every arm."""
-    from twitter_social_triangle_mapreduce_spark.operators.graph import (
-        ORDERED_SEMI_CONF,
-    )
-
     e = edges_from_events(spark, SF_SMOKE)
     # broadcast arm (default at smoke scale): no semi filter
     plan = plan_of(graph.triangle_count_ordered(e, 50000))
@@ -232,15 +228,8 @@ def test_ordered_semi_reduction_only_on_shuffle_arm(spark):
         assert "ShuffledHashJoin" in plan
         assert "LeftSemi" in plan and "xxhash64" in plan
         assert df.collect()[0][0] == baseline
-        # explicit off: shuffle arm without the reduction
-        spark.conf.set(ORDERED_SEMI_CONF, "off")
-        df = graph.triangle_count_ordered(e, 50000)
-        plan = plan_of(df)
-        assert "ShuffledHashJoin" in plan and "LeftSemi" not in plan
-        assert df.collect()[0][0] == baseline
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.conf.unset(ORDERED_SEMI_CONF)
 
 
 def test_trained_codebook_consumers_embed_a_constant_not_the_trainer(spark):

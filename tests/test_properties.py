@@ -336,43 +336,3 @@ def test_incremental_cluster_parity_on_random_corpora(spark, texts, split):
     assert sorted(map(tuple, upd.collect())) == sorted(
         map(tuple, bat.collect())
     )
-
-
-def test_minhash_long_doc_guard_parity(spark):
-    """Round 13 (r12 verdict item 6): with
-    ``spark.graft.minhash.maxRowLocalTokens`` set, documents above the
-    token bound take the exploded/aggregated minhash arm instead of
-    materializing their shingle+digest arrays in one row — and the band
-    values are IDENTICAL to the unguarded row-local computation, for
-    short docs, exactly-at-the-bound docs, and a pathologically long
-    one. Also pins that the guarded plan really splits: both arms
-    present, the long doc absent from the row-local side's filter."""
-    import random as _r
-
-    from twitter_social_triangle_mapreduce_spark.operators import dedup
-
-    rng = _r.Random(13)
-    vocab = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta"]
-    rows = [
-        (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(1, 40))))
-        for i in range(30)
-    ]
-    rows.append((100, " ".join(rng.choice(vocab) for _ in range(64))))  # at bound
-    rows.append((101, " ".join(rng.choice(vocab) for _ in range(5000))))  # long
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    base = sorted(
-        tuple(r) for r in dedup.minhash_bands(docs).collect()
-    )
-    spark.conf.set(dedup.MINHASH_MAX_ROW_LOCAL_TOKENS_CONF, "64")
-    try:
-        guarded_df = dedup.minhash_bands(docs)
-        guarded = sorted(tuple(r) for r in guarded_df.collect())
-        plan = guarded_df._jdf.queryExecution().optimizedPlan().toString()
-        assert "Union" in plan  # both arms really present
-    finally:
-        spark.conf.unset(dedup.MINHASH_MAX_ROW_LOCAL_TOKENS_CONF)
-    assert guarded == base
-    # the default (conf unset) single-arm plan has no union
-    plain = dedup.minhash_bands(docs)
-    assert "Union" not in plain._jdf.queryExecution().optimizedPlan().toString()

@@ -55,36 +55,8 @@ def test_plan_size_estimate_none_for_nonclassic(spark, monkeypatch):
     assert strategy.scan_partition_count(df) is None
 
 
-def test_conf_override_forces_each_arm(spark):
-    small = spark.range(10).select(F.col("id").alias("k"))
-    try:
-        spark.conf.set(strategy.BUILD_SIDE_CONF, "shuffle_hash")
-        assert _has_shuffle_hash_hint(
-            strategy.shuffle_hash_unless_broadcastable(small)
-        )
-        spark.conf.set(strategy.BUILD_SIDE_CONF, "broadcast")
-        out = strategy.shuffle_hash_unless_broadcastable(small)
-        assert "broadcast" in _analyzed(out).lower()
-    finally:
-        spark.conf.unset(strategy.BUILD_SIDE_CONF)
-
-
-def test_operator_specific_conf_wins_over_global(spark):
-    small = spark.range(10).select(F.col("id").alias("k"))
-    try:
-        spark.conf.set(strategy.BUILD_SIDE_CONF, "broadcast")
-        spark.conf.set(graph.ORDERED_CLOSING_CONF, "shuffle_hash")
-        out = strategy.shuffle_hash_unless_broadcastable(
-            small, conf_key=graph.ORDERED_CLOSING_CONF
-        )
-        assert _has_shuffle_hash_hint(out)
-    finally:
-        spark.conf.unset(strategy.BUILD_SIDE_CONF)
-        spark.conf.unset(graph.ORDERED_CLOSING_CONF)
-
-
-def test_spread_small_input_auto_and_off(spark):
-    # big enough that est_bytes / minBytesPerTask saturates the
+def test_spread_small_input_auto_and_off(spark, monkeypatch):
+    # big enough that est_bytes / SPREAD_MIN_BYTES_PER_TASK saturates the
     # parallelism target on this machine: 200k longs ~ 1.6 MB estimate
     # (Catalyst sizes derived columns by DEFAULT widths, not content —
     # a padded-string Project would estimate ~20 B/row regardless). The
@@ -93,31 +65,22 @@ def test_spread_small_input_auto_and_off(spark):
     # makes the size cap bind below the parallelism term)
     wide = spark.range(200_000).coalesce(1)
     est = strategy.plan_size_estimate(wide)
-    cap = int(
-        est * float(strategy.SPREAD_COMPRESSION_FACTOR_DEFAULT)
-    ) // strategy.parse_byte_conf(strategy.SPREAD_MIN_BYTES_DEFAULT)
+    cap = est // strategy.SPREAD_MIN_BYTES_PER_TASK
     spread = strategy.spread_small_input(wide)
     assert spread.rdd.getNumPartitions() == min(
         spark.sparkContext.defaultParallelism, cap
     )
     # size-aware arm (optimization round 12): a few-splits input whose
-    # ESTIMATED bytes are below minBytesPerTask per slot does not pay
-    # one near-empty task per slot — it spreads to est//minBytes
+    # ESTIMATED bytes are below the per-task floor per slot does not pay
+    # one near-empty task per slot — it spreads to est//floor
     # partitions (here: not at all)
     few = spark.range(100).coalesce(1)
     assert strategy.spread_small_input(few) is few
-    try:
-        # floor disabled -> the pre-round-12 split-count-only behavior
-        spark.conf.set(strategy.SPREAD_MIN_BYTES_CONF, "0")
-        assert strategy.spread_small_input(
-            few
-        ).rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
-        spark.conf.unset(strategy.SPREAD_MIN_BYTES_CONF)
-        spark.conf.set(strategy.SPREAD_CONF, "off")
-        assert strategy.spread_small_input(wide) is wide
-    finally:
-        spark.conf.unset(strategy.SPREAD_CONF)
-        spark.conf.unset(strategy.SPREAD_MIN_BYTES_CONF)
+    # a 1-byte floor -> the split-count-only behavior
+    monkeypatch.setattr(strategy, "SPREAD_MIN_BYTES_PER_TASK", 1)
+    assert strategy.spread_small_input(
+        few
+    ).rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
 
 
 def test_spread_small_input_noop_without_probe(spark, monkeypatch):
@@ -126,25 +89,6 @@ def test_spread_small_input_noop_without_probe(spark, monkeypatch):
     monkeypatch.setattr(strategy, "scan_partition_count", lambda df: None)
     few = spark.range(100).coalesce(1)
     assert strategy.spread_small_input(few) is few
-
-
-def test_ordered_closing_conf_reaches_operator(spark):
-    """The escape hatch must change the ordered triangle's physical plan
-    — and not its value."""
-    from twitter_social_triangle_mapreduce_spark.sources.io import (
-        edges_from_events,
-    )
-
-    e = edges_from_events(spark, SF_SMOKE)
-    baseline = graph.triangle_count_ordered(e, 50000).collect()[0][0]
-    try:
-        spark.conf.set(graph.ORDERED_CLOSING_CONF, "shuffle_hash")
-        forced = graph.triangle_count_ordered(e, 50000)
-        plan = forced._jdf.queryExecution().executedPlan().toString()
-        assert "ShuffledHashJoin" in plan
-        assert forced.collect()[0][0] == baseline
-    finally:
-        spark.conf.unset(graph.ORDERED_CLOSING_CONF)
 
 
 def test_quality_gate_survives_stopword_dense_long_doc(spark):
@@ -200,10 +144,10 @@ def test_plan_of_falls_back_to_explain_capture(spark, monkeypatch):
     assert "HashAggregate" in direct and "HashAggregate" in fallback
 
 
-def test_spread_force_arm_survives_missing_spark_context(spark, monkeypatch):
-    """Review finding: 'force' is the Connect remedy, so it must not
-    silently no-op when sparkContext is unavailable — it falls back to
-    spark.sql.shuffle.partitions for the repartition target."""
+def test_spread_auto_is_noop_without_spark_context(spark):
+    """Spark Connect has no ``sparkContext`` to size the spread from, so
+    the auto arm must return the input unchanged rather than guess a
+    target."""
 
     class NoCtx:
         def __init__(self, inner):
@@ -211,37 +155,24 @@ def test_spread_force_arm_survives_missing_spark_context(spark, monkeypatch):
 
         @property
         def sparkSession(self):
-            outer = self
-
             class S:
                 @property
                 def sparkContext(self):
                     raise AttributeError("no sparkContext over Connect")
-
-                @property
-                def conf(self):
-                    return outer._inner.sparkSession.conf
 
             return S()
 
         def __getattr__(self, name):
             return getattr(self._inner, name)
 
-    few = spark.range(100).coalesce(1)
-    try:
-        spark.conf.set(strategy.SPREAD_CONF, "force")
-        out = strategy.spread_small_input(NoCtx(few))
-        assert out.rdd.getNumPartitions() == int(
-            spark.conf.get("spark.sql.shuffle.partitions")
-        )
-    finally:
-        spark.conf.unset(strategy.SPREAD_CONF)
+    few = NoCtx(spark.range(100_000).coalesce(1))
+    assert strategy.spread_small_input(few) is few
 
 
-def test_ordered_semi_threshold_conf_disables_filter(spark):
-    """Review finding: the closing-key broadcast cap must be a session
-    conf, not a compile-time constant — setting it to -1 disables the
-    reduction on the shuffle arm."""
+def test_ordered_semi_threshold_conf_disables_filter(spark, monkeypatch):
+    """The closing-key broadcast cap gates the semi-join reduction on
+    the shuffle arm: a cap below the key set's estimate skips it, the
+    default cap keeps it, and the count is the same either way."""
     from twitter_social_triangle_mapreduce_spark.sources.io import (
         edges_from_events,
     )
@@ -250,25 +181,16 @@ def test_ordered_semi_threshold_conf_disables_filter(spark):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set(graph.ORDERED_SEMI_THRESHOLD_CONF, "-1")
-        plan = (
-            graph.triangle_count_ordered(e, 50000)
-            ._jdf.queryExecution()
-            .optimizedPlan()
-            .toString()
-        )
-        assert "LeftSemi" not in plan
-        spark.conf.set(graph.ORDERED_SEMI_THRESHOLD_CONF, "1g")
-        plan = (
-            graph.triangle_count_ordered(e, 50000)
-            ._jdf.queryExecution()
-            .optimizedPlan()
-            .toString()
-        )
+        with_semi = graph.triangle_count_ordered(e, 50000)
+        plan = with_semi._jdf.queryExecution().optimizedPlan().toString()
         assert "LeftSemi" in plan
+        monkeypatch.setattr(graph, "ORDERED_SEMI_MAX_KEY_BYTES", -1)
+        without = graph.triangle_count_ordered(e, 50000)
+        plan = without._jdf.queryExecution().optimizedPlan().toString()
+        assert "LeftSemi" not in plan
+        assert without.collect() == with_semi.collect()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.conf.unset(graph.ORDERED_SEMI_THRESHOLD_CONF)
 
 
 def test_prepare_corpus_rejects_bad_eval_mod(spark, tmp_path):
@@ -300,3 +222,20 @@ def test_stats_of_as_is_arm_applies_explicit_broadcast(spark):
     # to stats_of, not applied globally
     sm = strategy.shuffle_hash_unless_broadcastable(small)
     assert "unresolvedhint" not in _analyzed(sm).lower()
+
+
+def test_package_reads_no_graft_session_confs():
+    """Every plan choice is automatic: no module of the package names a
+    ``spark.graft.*`` session conf (and so keeps no forced arm behind
+    one)."""
+    import pathlib
+
+    import twitter_social_triangle_mapreduce_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    hits = [
+        str(p.relative_to(root))
+        for p in root.rglob("*.py")
+        if "spark.graft." in p.read_text()
+    ]
+    assert not hits, hits

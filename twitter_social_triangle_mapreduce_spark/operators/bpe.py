@@ -31,7 +31,7 @@ the tests.
 
 Scale: vocabulary at 100 TB is tens of millions of distinct words —
 the word table shuffles once at build. From there the merge loop has
-TWO arms behind a size gate (``LOCAL_MAX_WORDS_CONF``): the default
+TWO arms behind a size gate (``LOCAL_MAX_WORDS``): the default
 production path collects the vocabulary-sized table to the driver once
 and runs every merge round in-process with incrementally-maintained
 pair counts (the subword-nmt/HF shape — a 50k vocab is a driver loop,
@@ -53,21 +53,21 @@ from pyspark.sql import functions as F
 #: merged-symbol-recombines-with-neighbor rounds
 BPE_MERGES = 8
 
-#: conf key gating the driver-local merge loop: when the word-frequency
+#: row-count gate of the driver-local merge loop: when the word-frequency
 #: table (vocabulary-sized, NOT corpus-sized) has at most this many
 #: rows, the trainer collects it once and runs every merge round
 #: in-process (the subword-nmt shape) instead of one Spark job per
 #: merge. The gate is a ROW count, not a plan estimate: the table is
 #: already persisted and counted at this point, so the number is exact,
 #: whereas Catalyst's post-aggregation sizeInBytes is only an upper
-#: bound (plans/strategy.py:64). 5M rows ≈ a few hundred MB of driver
-#: heap — comfortable on any driver that can also hold the heap/index
-#: structures, and far above real tokenizer-training vocabularies
-#: (subword-nmt corpora collapse to low millions of distinct words).
-LOCAL_MAX_WORDS_CONF = "spark.graft.bpe.localMaxWords"
-LOCAL_MAX_WORDS_DEFAULT = 5_000_000
+#: bound (``plans.strategy.plan_size_estimate``). 5M rows ≈ a few
+#: hundred MB of driver heap — comfortable on any driver that can also
+#: hold the heap/index structures, and far above real tokenizer-training
+#: vocabularies (subword-nmt corpora collapse to low millions of
+#: distinct words).
+LOCAL_MAX_WORDS = 5_000_000
 
-#: conf key gating the ENCODING arm (round 8, r7 verdict item 2 — the
+#: merge-count gate of the ENCODING arm (round 8, r7 verdict item 2 — the
 #: same two-arm shape the trainer got): ``bpe_encode`` nests one HOF
 #: fold per merge, so plan depth grows linearly with the merge count
 #: and analysis/codegen time with it; above this many merges the call
@@ -83,8 +83,7 @@ LOCAL_MAX_WORDS_DEFAULT = 5_000_000
 #: keep only for trivial merge lists, where staying inside one
 #: codegen'd JVM plan (no Python workers, no Arrow hop) still wins. A
 #: real tokenizer's 30k-merge vocabulary MUST take the pandas arm.
-SQL_MAX_MERGES_CONF = "spark.graft.bpe.sqlMaxMerges"
-SQL_MAX_MERGES_DEFAULT = 4
+SQL_MAX_MERGES = 4
 
 #: end-of-word sentinel appended to every word's symbol sequence — the
 #: classic BPE boundary marker: merges that absorb it produce
@@ -260,7 +259,7 @@ def train_bpe_merges(
     Two arms behind a size gate (``mode="auto"``):
 
     * **local** — when the word-frequency table fits
-      ``spark.graft.bpe.localMaxWords`` rows (exact count, the table is
+      ``LOCAL_MAX_WORDS`` rows (exact count, the table is
       persisted anyway), collect it ONCE and run the merge rounds
       in-process (``_train_merges_local``). This is what every
       production trainer does: the table is vocabulary-sized, so a 50k
@@ -292,23 +291,14 @@ def train_bpe_merges(
         StorageLevel.MEMORY_AND_DISK
     )
     n_words = wtab.count()
-    if mode != "distributed":
+    if mode == "local" or (mode == "auto" and n_words <= LOCAL_MAX_WORDS):
         try:
-            gate = int(
-                documents.sparkSession.conf.get(
-                    LOCAL_MAX_WORDS_CONF, str(LOCAL_MAX_WORDS_DEFAULT)
-                )
-            )
-        except Exception:
-            gate = LOCAL_MAX_WORDS_DEFAULT
-        if mode == "local" or n_words <= gate:
-            try:
-                rows = wtab.select("word", "cnt").collect()
-            finally:
-                wtab.unpersist()
-            return _train_merges_local(
-                [(r["word"], int(r["cnt"])) for r in rows], n_merges
-            )
+            rows = wtab.select("word", "cnt").collect()
+        finally:
+            wtab.unpersist()
+        return _train_merges_local(
+            [(r["word"], int(r["cnt"])) for r in rows], n_merges
+        )
     merges: list[tuple[int, str, str, int]] = []
     try:
         for rank in range(n_merges):
@@ -379,19 +369,14 @@ def bpe_encode(
     merge count). Token counts against ``text_stats``' whitespace
     counts measure tokenizer fertility.
 
-    Auto-gated (round 8): above ``spark.graft.bpe.sqlMaxMerges``
-    merges (default 4 — measured crossover, see the conf note) the
+    Auto-gated (round 8): above ``SQL_MAX_MERGES`` merges (4 — the
+    measured crossover, see the constant's note) the
     call routes to ``bpe_encode_pandas``, whose cost is ~flat in
     vocabulary size; at or below it the nested folds stay entirely
     inside one codegen'd JVM plan and beat the Arrow hop. Both arms
     are greedy-identical by construction and pinned equivalent across
     the threshold."""
-    gate = int(
-        documents.sparkSession.conf.get(
-            SQL_MAX_MERGES_CONF, str(SQL_MAX_MERGES_DEFAULT)
-        )
-    )
-    if len(merges) > gate:
+    if len(merges) > SQL_MAX_MERGES:
         return bpe_encode_pandas(documents, merges)
     out = documents.select(
         "doc_id",

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.strategy import spread_small_input
+
 #: word-level shingle width for MinHash / Jaccard
 SHINGLE_N = 3
 #: number of minhash permutations (md5 salt 0..NUM_HASHES-1)
@@ -62,35 +64,10 @@ BAND_SIZE = 2
 #: pack into one signed BIGINT without overflow
 MINHASH_HEX_CHARS = 7
 
-#: conf key for the row-local minhash's long-document guard (round 13,
-#: r12 verdict item 6): documents with MORE whitespace tokens than this
-#: take the exploded/aggregated arm (streaming per-shingle rows) instead
-#: of materializing the shingle + digest arrays in one row. ``0`` (the
-#: default) keeps every document row-local — the right call on corpora
-#: whose documents are bounded (every plan digest unchanged); production
-#: corpora that cannot bound document length set e.g. ``1000000`` so a
-#: pathological multi-MB document costs O(1) row memory instead of
-#: O(doc_tokens) array cells. Values are identical on both arms (same
-#: md5/substr/conv arithmetic — pinned by the parity property test).
-MINHASH_MAX_ROW_LOCAL_TOKENS_CONF = "spark.graft.minhash.maxRowLocalTokens"
-
-
-def _spread_small_input(df: DataFrame) -> DataFrame:
-    """Raise map-side parallelism before CPU-heavy per-row derivation
-    (shingling, the 2-digest minhash fold) when the source provides far
-    fewer splits than the cluster has slots — delegates to the shared
-    Connect-safe implementation (``plans.strategy.spread_small_input``;
-    no-op arms, the ``spark.graft.spreadSmallInput`` escape hatch, and
-    the Connect fallback are documented and tested there)."""
-    from ..plans.strategy import spread_small_input
-
-    return spread_small_input(df)
-
-
 def tokens(documents: DataFrame) -> DataFrame:
     """(doc_id, tok) — whitespace tokenization, one row per occurrence.
 
-    Deliberately NOT spread via ``_spread_small_input``: tokenization is
+    Deliberately NOT spread via ``spread_small_input``: tokenization is
     cheap relative to the aggregation shuffle that always follows it, and
     the measured bench effect of a pre-spread here was negative (the
     extra exchange + stage latency outweighed the map parallelism —
@@ -112,7 +89,7 @@ def shingles(
     small-input pre-spread for callers whose relation is known tiny by
     contract (an eval set) — the spread's per-task fixed cost exceeds
     the derivation there (optimization round 12)."""
-    src = _spread_small_input(documents) if spread else documents
+    src = spread_small_input(documents) if spread else documents
     ws = src.select(
         "doc_id", F.split("text", " ").alias("ws")
     ).where(F.size("ws") >= n)
@@ -175,70 +152,20 @@ def minhash_bands(documents: DataFrame) -> DataFrame:
     pure projection of the document scan (measured: 1.46 s → 1.12 s at
     2 cores on sf0.1 AND one less corpus exchange at any scale; values
     bit-identical — pinned by the unchanged oracle). The input is still
-    pre-spread (``_spread_small_input``) because the per-row cost is
-    ~n_words string builds plus 2 md5 digests per shingle — the
-    CPU-heavy-derivation shape that needs map parallelism on few-split
-    sources.
+    pre-spread (``plans.strategy.spread_small_input``) because the
+    per-row cost is ~n_words string builds plus 2 md5 digests per
+    shingle — the CPU-heavy-derivation shape that needs map parallelism
+    on few-split sources.
 
-    Long-document guard (round 13 — ``MINHASH_MAX_ROW_LOCAL_TOKENS_CONF``):
-    the row-local arm holds a document's shingle array plus NUM_HASHES/4
-    digest arrays in ONE row — bounded by max document length, which is
-    fine wherever documents are bounded, but a pathological multi-MB
-    document would cost O(doc_tokens) strings of single-row memory where
-    the old explode streamed. With the conf set to a positive token
-    count, documents above it take the exploded+aggregated arm (per-
-    shingle rows, groupBy(doc_id) min — the pre-round-12 shape) and the
-    two arms union; values are identical (same md5/substr/conv
-    arithmetic on both arms — parity-pinned by
-    tests/test_properties.py::test_minhash_long_doc_guard_parity). The
-    default 0 keeps the single-arm plan (digests unchanged)."""
+    Memory note: the shingle array plus NUM_HASHES/4 digest arrays of a
+    document live in ONE row — bounded by the longest document, which is
+    fine wherever document length is bounded (every shipped corpus)."""
     n = SHINGLE_N
     ws = (
-        _spread_small_input(documents)
+        spread_small_input(documents)
         .select("doc_id", F.split("text", " ").alias("ws"))
         .where(F.size("ws") >= n)
     )
-    try:
-        max_tok = int(
-            documents.sparkSession.conf.get(
-                MINHASH_MAX_ROW_LOCAL_TOKENS_CONF, "0"
-            )
-            or "0"
-        )
-    except Exception:
-        max_tok = 0
-    if max_tok > 0:
-        return _bands_row_local(
-            ws.where(F.size("ws") <= max_tok)
-        ).unionByName(_bands_exploded(ws.where(F.size("ws") > max_tok)))
-    return _bands_row_local(ws)
-
-
-def _pack_bands(sig: DataFrame) -> DataFrame:
-    """(doc_id, m0..m{NUM_HASHES-1}) → (doc_id, band, bh): pack BAND_SIZE
-    28-bit minhashes per band into one BIGINT (integer-exact in both
-    engines) — the shared tail of both minhash arms."""
-    n_bands = NUM_HASHES // BAND_SIZE
-    place = 16 ** MINHASH_HEX_CHARS
-    stack = ", ".join(
-        f"{b}L, "
-        + " + ".join(
-            f"m{b * BAND_SIZE + j} * {place ** (BAND_SIZE - 1 - j)}"
-            for j in range(BAND_SIZE)
-        )
-        for b in range(n_bands)
-    )
-    return sig.select(
-        "doc_id", F.expr(f"stack({n_bands}, {stack}) AS (band, bh)")
-    )
-
-
-def _bands_row_local(ws: DataFrame) -> DataFrame:
-    """Row-local arm over a (doc_id, ws) relation (size(ws) ≥ SHINGLE_N
-    pre-filtered): shingle array → digest arrays → array_min over
-    fixed-width hex substrings (lexicographic == numeric), one ``conv``
-    per document per hash."""
-    n = SHINGLE_N
     # greatest(…, 1): keeps the sequence ascending/total even when a
     # downstream inferred predicate (isnotnull on a join key, generator
     # pruning) is pushed below the size(ws) >= n filter and CSE
@@ -260,40 +187,21 @@ def _bands_row_local(ws: DataFrame) -> DataFrame:
         f" {MINHASH_HEX_CHARS}))), 16, 10) AS BIGINT) AS m{i}"
         for i in range(NUM_HASHES)
     ]
-    return _pack_bands(staged.selectExpr("doc_id", *mins))
-
-
-def _bands_exploded(ws: DataFrame) -> DataFrame:
-    """Exploded arm for documents too long to hold their shingle/digest
-    arrays in one row: per-shingle rows (streamed by the generator, never
-    materialized per doc), NUM_HASHES ``min`` expressions in one
-    groupBy(doc_id) with map-side partial mins — the pre-round-12 shape,
-    value-identical arithmetic."""
-    n = SHINGLE_N
-    sh = ws.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, greatest(size(ws) - {n - 1}, 1)),"
-                f" i -> array_join(slice(ws, i, {n}), ' '))"
-            )
-        ).alias("sh"),
+    # pack BAND_SIZE 28-bit minhashes per band into one BIGINT
+    # (integer-exact in both engines)
+    n_bands = NUM_HASHES // BAND_SIZE
+    place = 16 ** MINHASH_HEX_CHARS
+    stack = ", ".join(
+        f"{b}L, "
+        + " + ".join(
+            f"m{b * BAND_SIZE + j} * {place ** (BAND_SIZE - 1 - j)}"
+            for j in range(BAND_SIZE)
+        )
+        for b in range(n_bands)
     )
-    longed = sh.select(
-        "doc_id",
-        *[
-            F.expr(
-                f"CAST(conv(substr(md5(concat(sh, '#{i // 4}')),"
-                f" {1 + MINHASH_HEX_CHARS * (i % 4)},"
-                f" {MINHASH_HEX_CHARS}), 16, 10) AS BIGINT)"
-            ).alias(f"l{i}")
-            for i in range(NUM_HASHES)
-        ],
+    return staged.selectExpr("doc_id", *mins).select(
+        "doc_id", F.expr(f"stack({n_bands}, {stack}) AS (band, bh)")
     )
-    sig = longed.groupBy("doc_id").agg(
-        *[F.min(f"l{i}").alias(f"m{i}") for i in range(NUM_HASHES)]
-    )
-    return _pack_bands(sig)
 
 
 def minhash_candidate_pairs(documents: DataFrame) -> DataFrame:

@@ -46,31 +46,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-#: conf escape hatch for the ordered-triangle closing join's physical
-#: form: auto (default — probe Catalyst's plan-time size estimate,
-#: Connect-safe) | broadcast | shuffle_hash
-ORDERED_CLOSING_CONF = "spark.graft.ordered.closingStrategy"
-
-#: semi-join reduction of the wedge exchange on the SHUFFLE_HASH arm:
-#: auto (default — fires when the closing-key relation's plan-time
-#: estimate fits the threshold below) | on | off
-ORDERED_SEMI_CONF = "spark.graft.ordered.semiFilter"
-#: conf key + default for the closing-key broadcast cap (8-byte hashes,
-#: one per distinct support edge — a deliberately SEPARATE knob from
+#: broadcast cap for the ordered triangle's closing-KEY set (the
+#: semi-join reduction on the SHUFFLE_HASH arm — 8-byte hashes, one per
+#: distinct support edge; a deliberately SEPARATE cap from
 #: spark.sql.autoBroadcastJoinThreshold, because the key set is ~4×
 #: narrower than the closing relation whose broadcast that threshold
-#: rejected; clusters with large executors raise it, small ones lower
-#: or disable it). The default is sized by measurement, not hope: the
-#: built LongHashedRelation is a small multiple of Catalyst's raw
-#: estimate plus driver + executor copies, and a 1g cap let the
-#: 100M-edge probe (keys est 1,067 MB) build a multi-GB broadcast that
-#: OOM'd an 8g driver; 256m keeps the 10M-edge regime firing (est
-#: 107 MB → ~300 MB built) and degrades 100M+ to the plain unreduced
-#: exchange. The estimate itself is an E-scale OVERESTIMATE for the
-#: projected aggregate, so the guard errs toward skipping the filter —
-#: the arm that only costs the exchange, never memory.
-ORDERED_SEMI_THRESHOLD_CONF = "spark.graft.ordered.semiFilterThreshold"
-ORDERED_SEMI_THRESHOLD_DEFAULT = "256m"
+#: rejected). Sized by measurement, not hope: the built
+#: LongHashedRelation is a small multiple of Catalyst's raw estimate
+#: plus driver + executor copies, and a 1 GiB cap let the 100M-edge
+#: probe (keys est 1,067 MB) build a multi-GB broadcast that OOM'd an
+#: 8g driver; 256 MiB keeps the 10M-edge regime firing (est 107 MB →
+#: ~300 MB built) and degrades 100M+ to the plain unreduced exchange.
+#: The estimate itself is an E-scale OVERESTIMATE for the projected
+#: aggregate, so the guard errs toward skipping the filter — the arm
+#: that only costs the exchange, never memory.
+ORDERED_SEMI_MAX_KEY_BYTES = 256 * 2**20
 
 
 def filter_edges(
@@ -541,42 +531,20 @@ def triangle_count_ordered(
     # it. On the broadcast arm the filter is pure overhead (the wedge
     # side never exchanges) and is skipped — the small-scale plan is
     # byte-identical to round 3. The key-set broadcast is guarded by its
-    # own (overestimating) size probe + conf, so at a scale where the
-    # keys stop fitting, the arm degrades to the plain unreduced
-    # exchange — never a too-large broadcast.
-    from ..plans.strategy import (
-        _conf,
-        build_side_mode,
-        parse_byte_conf,
-        plan_size_estimate,
-    )
+    # own (overestimating) size probe against ORDERED_SEMI_MAX_KEY_BYTES,
+    # so at a scale where the keys stop fitting, the arm degrades to the
+    # plain unreduced exchange — never a too-large broadcast. Both
+    # choices are automatic; spark.sql.autoBroadcastJoinThreshold=-1
+    # puts the closing join on the shuffle arm.
+    from ..plans.strategy import build_side_mode, plan_size_estimate
 
-    mode = build_side_mode(closing, ORDERED_CLOSING_CONF)
-    if mode == "broadcast":
-        closing_side = F.broadcast(closing)
-    elif mode == "as_is":
+    if build_side_mode(closing) == "as_is":
         closing_side = closing
     else:
         closing_side = closing.hint("shuffle_hash")
-        semi = _conf(closing, ORDERED_SEMI_CONF, "auto") or "auto"
-        if semi == "auto":
-            try:
-                thresh = parse_byte_conf(
-                    _conf(
-                        closing,
-                        ORDERED_SEMI_THRESHOLD_CONF,
-                        ORDERED_SEMI_THRESHOLD_DEFAULT,
-                    )
-                    or ORDERED_SEMI_THRESHOLD_DEFAULT
-                )
-            except Exception:
-                thresh = -1
-            keys = closing.select(F.xxhash64("u", "v").alias("__k"))
-            est = plan_size_estimate(keys)
-            if est is not None and 0 < thresh and 0 <= est <= thresh:
-                semi = "on"
-        if semi == "on":
-            keys = closing.select(F.xxhash64("u", "v").alias("__k"))
+        keys = closing.select(F.xxhash64("u", "v").alias("__k"))
+        est = plan_size_estimate(keys)
+        if est is not None and 0 <= est <= ORDERED_SEMI_MAX_KEY_BYTES:
             wedges = wedges.join(
                 F.broadcast(keys),
                 F.xxhash64(F.col("u"), F.col("v")) == F.col("__k"),

@@ -92,11 +92,10 @@ PASSAGE_STRIDE = 1
 #: (measured at sf0.1: 8.57 → 7.27 MB/run, wall −15%). Bounds, guarded
 #: crash-not-corrupt by ``_packed_occurrence``: 0 ≤ doc_id < 2^39
 #: (5.5e11 documents) and start < 2^24 (16.7M tokens ≈ 100 MB of text
-#: in ONE document); max packed value is exactly 2^63 − 1. Corpora that
-#: genuinely exceed either bound set the conf to ``struct`` to restore
-#: the unbounded struct arm (value-identical — parity-pinned).
+#: in ONE document); max packed value is exactly 2^63 − 1. A corpus
+#: outside either bound fails loudly rather than electing a wrong
+#: canonical.
 PASSAGE_PACK_START_BITS = 24
-PACKED_CANON_CONF = "spark.graft.passages.packedCanon"
 
 
 def passage_windows(
@@ -150,8 +149,8 @@ def passage_cut_spans(
     content always survives somewhere.
 
     Shape: one groupBy(wh) computes count and the canonical occurrence
-    together (both partial-agg combinable — ``min`` over a
-    (doc_id, start) struct is the lexicographic arg-min); occurrences
+    together (both partial-agg combinable — ``min`` over the packed
+    (doc_id, start) BIGINT is the lexicographic arg-min); occurrences
     join back on wh (collision survivors only); island-merge per doc via
     a doc-partitioned window over cut spans (overlapping OR adjacent
     spans coalesce — removing both equals removing the union)."""
@@ -180,47 +179,27 @@ def _noncanonical_cut_windows(wins: DataFrame, window: int) -> DataFrame:
     EnsureRequirements shuffle stages, and the agg-aligned build
     pipeline (and even a REPARTITION_BY_COL exchange) fails that
     pattern. The extra exchange moves only the collision-keys relation
-    (a small fraction of wins); ``spark.graft.passages.dupKeysStrategy``
-    overrides the arm choice.
+    (a small fraction of wins).
 
     Canonical encoding (round 13): the aggregate's canonical travels as
     the packed BIGINT of ``_packed_occurrence`` (HashAggregate instead
     of two corpus-window SORTs, a narrower exchange row — see
-    ``PACKED_CANON_CONF`` for the bounds/escape hatch), and the probe
-    side compares its own packed occurrence against it — identical
-    non-canonical set (packing is strictly monotone in (doc_id, start)
-    within the guarded bounds)."""
+    ``PASSAGE_PACK_START_BITS`` for the bounds), and the probe side
+    compares its own packed occurrence against it — the lexicographic
+    (doc_id, start) non-canonical set (packing is strictly monotone in
+    (doc_id, start) within the guarded bounds)."""
     from ..plans.strategy import build_side_mode
 
-    packed = str(
-        _conf_of(wins, PACKED_CANON_CONF, "packed") or "packed"
-    ).lower() != "struct"
-    if packed:
-        dup_keys = (
-            wins.groupBy("wh")
-            .agg(
-                F.count(F.lit(1)).alias("__cnt"),
-                F.min(_packed_occurrence()).alias("__canon_p"),
-            )
-            .where(F.col("__cnt") > 1)
-            .select("wh", "__canon_p")
+    dup_keys = (
+        wins.groupBy("wh")
+        .agg(
+            F.count(F.lit(1)).alias("__cnt"),
+            F.min(_packed_occurrence()).alias("__canon_p"),
         )
-    else:
-        dup_keys = (
-            wins.groupBy("wh")
-            .agg(
-                F.count(F.lit(1)).alias("__cnt"),
-                F.min(F.struct("doc_id", "start")).alias("__canon"),
-            )
-            .where(F.col("__cnt") > 1)
-            .select("wh", "__canon")
-        )
-    mode = build_side_mode(
-        dup_keys, conf_key="spark.graft.passages.dupKeysStrategy"
+        .where(F.col("__cnt") > 1)
+        .select("wh", "__canon_p")
     )
-    if mode == "broadcast":
-        dup_keys = F.broadcast(dup_keys)
-    elif mode == "shuffle_hash":
+    if build_side_mode(dup_keys) == "shuffle_hash":
         try:
             n = int(
                 dup_keys.sparkSession.conf.get(
@@ -231,16 +210,8 @@ def _noncanonical_cut_windows(wins: DataFrame, window: int) -> DataFrame:
         except Exception:
             n = 200
         dup_keys = dup_keys.repartition(n)
-    joined = wins.join(dup_keys, "wh")
-    noncanon = (
-        joined.where(_packed_occurrence() != F.col("__canon_p"))
-        if packed
-        else joined.where(
-            ~(
-                (F.col("doc_id") == F.col("__canon.doc_id"))
-                & (F.col("start") == F.col("__canon.start"))
-            )
-        )
+    noncanon = wins.join(dup_keys, "wh").where(
+        _packed_occurrence() != F.col("__canon_p")
     )
     return noncanon.select(
         "doc_id",
@@ -249,28 +220,23 @@ def _noncanonical_cut_windows(wins: DataFrame, window: int) -> DataFrame:
     )
 
 
-def _conf_of(df: DataFrame, key: str, default: str | None) -> str | None:
-    try:
-        return df.sparkSession.conf.get(key, default)
-    except Exception:
-        return default
-
-
 def _packed_occurrence():
     """(doc_id, start) packed into one BIGINT — ``doc_id · 2^24 + start``
-    with a crash-not-corrupt bound guard (see ``PACKED_CANON_CONF``):
+    with a crash-not-corrupt bound guard (see ``PASSAGE_PACK_START_BITS``):
     numeric min == lexicographic (doc_id, start) min inside the bounds,
     and a corpus outside them fails LOUDLY instead of electing a wrong
     canonical (a silent wrong canonical would cut the wrong occurrence
     — the FAILFAST-reader stance applied to an encoding bound)."""
-    place = 1 << PASSAGE_PACK_START_BITS
+    start_bits = PASSAGE_PACK_START_BITS
+    place = 1 << start_bits
     return F.expr(
-        f"CASE WHEN doc_id >= 0 AND doc_id < {1 << (63 - PASSAGE_PACK_START_BITS)}"
+        f"CASE WHEN doc_id >= 0 AND doc_id < {1 << (63 - start_bits)}"
         f" AND start >= 0 AND start < {place}"
         f" THEN doc_id * {place} + start"
         f" ELSE CAST(raise_error(concat('passages: packed-canonical bounds"
         f" exceeded (doc_id ', CAST(doc_id AS STRING), ', start ',"
-        f" CAST(start AS STRING), ') — set {PACKED_CANON_CONF}=struct'))"
+        f" CAST(start AS STRING), ') — need 0 <= doc_id < 2^{63 - start_bits}"
+        f" and 0 <= start < 2^{start_bits}'))"
         f" AS BIGINT) END"
     )
 
@@ -400,8 +366,7 @@ def incremental_passage_cuts(
     # width factor: one window row is ≤ 40 B (16 B digest + two longs +
     # overhead) per ~6 B source token — ~5.3×, rounded up so the guard
     # errs toward the shuffle arm.
-    mode = build_side_mode(batch_whs, stats_of=new_docs, scale=8.0)
-    if mode in ("as_is", "broadcast"):
+    if build_side_mode(batch_whs, stats_of=new_docs, scale=8.0) == "as_is":
         batch_whs, hint = F.broadcast(batch_whs), F.broadcast
     else:
         batch_whs = batch_whs.hint("shuffle_hash")

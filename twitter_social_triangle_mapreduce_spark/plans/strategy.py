@@ -1,25 +1,20 @@
-"""Connect-safe, conf-overridable join/partitioning strategy guards.
+"""Connect-safe join/partitioning strategy guards.
 
 Two operators make plan-time physical decisions from session internals:
 the ordered-triangle closing join probes Catalyst's optimized-plan size
 estimate (``df._jdf`` — classic-only), and the shingle pipeline probes
 the scan's split count (``df.rdd`` — classic-only). Neither internal
 exists under Spark Connect, so every probe here is (1) gated on an
-explicit capability check, (2) overridable through a documented conf,
-and (3) degrades to the SCALE-SAFE arm — a shuffled hash join / a
-no-op — never silently to an over-threshold broadcast or a corpus-wide
-repartition. The fallback arms are pinned by tests
-(tests/test_strategy.py) so "which arm runs when the probe is
+explicit capability check and (2) degrades to the SCALE-SAFE arm — a
+shuffled hash join / a no-op — never silently to an over-threshold
+broadcast or a corpus-wide repartition. The fallback arms are pinned by
+tests (tests/test_strategy.py) so "which arm runs when the probe is
 unavailable" is a stated contract, not an accident.
 
-Conf escape hatches (settable per session, read at plan time):
-
-- ``spark.graft.join.buildSide`` = ``auto`` (default) | ``broadcast`` |
-  ``shuffle_hash`` — global override for every size-guarded build side.
-  Operators may pass a more specific key (e.g.
-  ``spark.graft.ordered.closingStrategy``) which, when set, wins.
-- ``spark.graft.spreadSmallInput`` = ``auto`` (default) | ``off`` |
-  ``force`` — the few-splits pre-spread before CPU-heavy derivation.
+Every decision here is automatic: the engine picks the physical form
+from the statistics it observes. The only session knob consulted is
+Spark's own ``spark.sql.autoBroadcastJoinThreshold`` (``-1`` forces
+every size-guarded build side onto the shuffle-hash arm).
 """
 
 from __future__ import annotations
@@ -27,41 +22,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: global conf key for the size-guarded build-side decision
-BUILD_SIDE_CONF = "spark.graft.join.buildSide"
-#: conf key for the small-input spread decision
-SPREAD_CONF = "spark.graft.spreadSmallInput"
-#: conf key + default for the spread's size-aware target (optimization
-#: round 12): the minimum estimated input bytes one spread partition
-#: must carry for the repartition to be worth a task's fixed cost. A
-#: derivation task that would receive less than this much source text
-#: costs more in per-task setup (agg hash-map + shuffle-writer init —
-#: measured ~0.1 s CPU per task on the reference sandbox) than the
-#: derivation itself; spreading a 30 KB eval set across 32 slots burned
-#: ~4 CPU-s to parallelize 0.07 s of work. The target partition count
-#: becomes min(defaultParallelism, est_bytes // minBytesPerTask) — at
+#: the spread's size-aware target: the minimum estimated plan bytes one
+#: spread partition must carry for the repartition to be worth a task's
+#: fixed cost (optimization round 12). A derivation task that would
+#: receive less than this much source costs more in per-task setup
+#: (agg hash-map + shuffle-writer init — measured ~0.1 s CPU per task)
+#: than the derivation itself; spreading a 30 KB eval set across 32
+#: slots burned ~4 CPU-s to parallelize 0.07 s of work. The target partition count becomes
+#: min(defaultParallelism, est_bytes // SPREAD_MIN_BYTES_PER_TASK) — at
 #: corpus scale the estimate saturates the parallelism term and the
-#: behavior is unchanged.
-SPREAD_MIN_BYTES_CONF = "spark.graft.spreadSmallInput.minBytesPerTask"
-SPREAD_MIN_BYTES_DEFAULT = "48k"
-#: conf key + default for the compressed→decompressed correction applied
-#: to the size estimate before dividing by minBytesPerTask (round 13,
-#: r12 ADVICE): Catalyst's sizeInBytes for a parquet scan is ON-DISK
-#: (compressed) bytes (spark.sql.sources.fileCompressionFactor defaults
-#: to 1.0), often several times below the decompressed text the
-#: CPU-heavy derivation actually processes — so without the correction
-#: the estimate is a LOWER bound for file scans and medium compressed
-#: inputs under-spread. 3.0 is a conservative text-parquet ratio
-#: (snappy/zstd text compresses ~3–5×); the (48k, 3.0) defaults are
-#: jointly calibrated so est·3//48k == est//16k — byte-identical
-#: behavior to the round-12-measured (16k compressed) rule, with both
-#: knobs now in honest decompressed-bytes units. Callers on
-#: incompressible inputs set 1.0; raising fileCompressionFactor
-#: globally would instead distort every broadcast-threshold decision.
-SPREAD_COMPRESSION_FACTOR_CONF = (
-    "spark.graft.spreadSmallInput.compressionFactor"
-)
-SPREAD_COMPRESSION_FACTOR_DEFAULT = "3.0"
+#: behavior is unchanged. The unit is Catalyst's estimate, which for a
+#: parquet scan is ON-DISK (compressed) bytes: 16 KiB of it is ~48 KiB
+#: of decompressed text at a conservative 3× text-parquet ratio (the
+#: round-13 calibration, est·3 // 48k == est // 16k exactly).
+SPREAD_MIN_BYTES_PER_TASK = 16 * 1024
 
 
 def parse_byte_conf(s: str) -> int:
@@ -123,7 +97,6 @@ def scan_partition_count(df: DataFrame) -> int | None:
 
 def build_side_mode(
     side: DataFrame,
-    conf_key: str | None = None,
     stats_of: DataFrame | None = None,
     scale: float = 1.0,
 ) -> str:
@@ -131,11 +104,13 @@ def build_side_mode(
     so operators can couple FURTHER plan choices to the same arm (the
     ordered triangle adds a semi-join reduction only on the shuffle arm):
 
-    - ``"as_is"``   — Catalyst's own estimate fits the broadcast
+    - ``"as_is"``        — Catalyst's own estimate fits the broadcast
       threshold; leave the side unhinted and the planner broadcasts.
-    - ``"broadcast"`` / ``"shuffle_hash"`` — forced by conf, or (for
-      shuffle_hash) the auto fallback when statistics are unavailable
-      (Spark Connect), unparseable, or over-threshold.
+    - ``"shuffle_hash"`` — the estimate is over the threshold, the
+      threshold is disabled or unparseable, or statistics are
+      unavailable (Spark Connect): the scale-safe arm (a missed
+      broadcast costs one exchange; a wrong broadcast costs executor
+      memory). This fallback is asserted by tests/test_strategy.py.
 
     ``stats_of`` + ``scale`` (round 5): a build side containing a
     Generate (explode) gets an effectively unbounded Catalyst estimate
@@ -148,13 +123,6 @@ def build_side_mode(
     threshold. Callers must pick ``scale`` as an upper bound of the
     derived/source byte ratio so the guard keeps erring toward the
     memory-safe side."""
-    mode = "auto"
-    if conf_key:
-        mode = _conf(side, conf_key, "auto") or "auto"
-    if mode == "auto":
-        mode = _conf(side, BUILD_SIDE_CONF, "auto") or "auto"
-    if mode in ("broadcast", "shuffle_hash"):
-        return mode
     try:
         thresh = parse_byte_conf(
             _conf(side, "spark.sql.autoBroadcastJoinThreshold", "10485760")
@@ -170,7 +138,6 @@ def build_side_mode(
 
 def shuffle_hash_unless_broadcastable(
     side: DataFrame,
-    conf_key: str | None = None,
     stats_of: DataFrame | None = None,
     scale: float = 1.0,
 ) -> DataFrame:
@@ -180,18 +147,7 @@ def shuffle_hash_unless_broadcastable(
     a broadcast hash join — zero exchange on the big probe side),
     otherwise hint SHUFFLE_HASH so the non-broadcast fallback is a hash
     join that streams the probe side instead of a sort-merge join that
-    would sort it.
-
-    Decision order (see ``build_side_mode``):
-    1. ``conf_key`` (operator-specific, e.g.
-       ``spark.graft.ordered.closingStrategy``), when set;
-    2. ``spark.graft.join.buildSide``, when set to a non-``auto`` value;
-    3. ``auto``: probe plan statistics. Unavailable statistics (Spark
-       Connect — ``plan_size_estimate`` returns None), an unparseable
-       threshold, or a disabled threshold all take the SHUFFLE_HASH arm —
-       the scale-safe direction (a missed broadcast costs one exchange; a
-       wrong broadcast costs executor memory). This documented fallback
-       is asserted by tests/test_strategy.py.
+    would sort it. The decision is ``build_side_mode``'s.
 
     ``stats_of``/``scale`` forward to ``build_side_mode`` — see there
     (explode-bearing build sides must supply real statistics). When
@@ -199,13 +155,8 @@ def shuffle_hash_unless_broadcastable(
     broadcast hint (round-6 ADVICE): the whole point of the substitute
     statistics is that the planner cannot bound the derived side's own
     estimate, so returning it unhinted would leave Catalyst re-deriving
-    the unbounded number and never actually broadcasting — the two
-    prior call sites handled this inconsistently; now the helper does
-    it."""
-    mode = build_side_mode(side, conf_key, stats_of=stats_of, scale=scale)
-    if mode == "broadcast":
-        return F.broadcast(side)
-    if mode == "as_is":
+    the unbounded number and never actually broadcasting."""
+    if build_side_mode(side, stats_of=stats_of, scale=scale) == "as_is":
         return F.broadcast(side) if stats_of is not None else side
     return side.hint("shuffle_hash")
 
@@ -220,62 +171,26 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     the whole corpus. The shuffled bytes in the firing case are by
     construction small (few-splits input).
 
-    ``spark.graft.spreadSmallInput``: ``off`` disables, ``force``
-    repartitions unconditionally, ``auto`` (default) probes the split
-    count — and is a documented NO-OP under Spark Connect
-    (``scan_partition_count`` returns None), the safe arm: a
-    Connect-backed cluster at real scale has many splits anyway. The
-    ``force`` escape hatch is exactly the Connect remedy, so it must
-    NOT depend on the classic-only ``sparkContext`` — it falls back to
-    ``spark.sql.shuffle.partitions`` (readable over Connect) for the
-    target when ``defaultParallelism`` is unavailable (review
-    finding)."""
-    mode = _conf(df, SPREAD_CONF, "auto") or "auto"
-    if mode == "off":
-        return df
+    A documented NO-OP under Spark Connect (no ``sparkContext`` for the
+    slot count, and ``scan_partition_count`` returns None) — the safe
+    arm: a Connect-backed cluster at real scale has many splits anyway.
+
+    Size-aware target (optimization round 12): the spread width is
+    capped so each partition carries at least
+    ``SPREAD_MIN_BYTES_PER_TASK`` of estimated plan bytes — a
+    sub-threshold relation spreads to fewer slots (or not at all)
+    instead of paying ~0.1 s of fixed task setup per near-empty
+    partition. Catalyst does NOT reduce the estimate through filters
+    without CBO (errs toward spreading), and a parquet scan's estimate
+    is compressed bytes (the constant's unit — see its note). An
+    unavailable estimate keeps the full target."""
     try:
         target = df.sparkSession.sparkContext.defaultParallelism
     except Exception:
-        target = None
-    if mode == "force":
-        if target is None:
-            target = int(
-                _conf(df, "spark.sql.shuffle.partitions", "200") or "200"
-            )
-        return df.repartition(target)
-    if target is None:
         return df
-    # size-aware target (optimization round 12): cap the spread width so
-    # each partition carries at least SPREAD_MIN_BYTES_CONF of estimated
-    # DECOMPRESSED input — a sub-threshold relation spreads to fewer
-    # slots (or not at all) instead of paying ~0.1 s of fixed task setup
-    # per near-empty partition. Estimate direction (round-13 ADVICE fix):
-    # Catalyst does NOT reduce the estimate through filters without CBO
-    # (errs toward spreading), but a parquet scan's sizeInBytes is
-    # COMPRESSED on-disk bytes (errs toward under-spreading) — the
-    # compressionFactor conf corrects the latter; see its doc above. An
-    # unavailable estimate keeps the full target.
-    try:
-        min_bytes = parse_byte_conf(
-            _conf(df, SPREAD_MIN_BYTES_CONF, SPREAD_MIN_BYTES_DEFAULT)
-            or SPREAD_MIN_BYTES_DEFAULT
-        )
-    except Exception:
-        min_bytes = parse_byte_conf(SPREAD_MIN_BYTES_DEFAULT)
-    try:
-        factor = float(
-            _conf(
-                df,
-                SPREAD_COMPRESSION_FACTOR_CONF,
-                SPREAD_COMPRESSION_FACTOR_DEFAULT,
-            )
-            or SPREAD_COMPRESSION_FACTOR_DEFAULT
-        )
-    except Exception:
-        factor = float(SPREAD_COMPRESSION_FACTOR_DEFAULT)
     est = plan_size_estimate(df)
-    if est is not None and min_bytes > 0:
-        target = max(1, min(target, int(est * factor) // min_bytes))
+    if est is not None:
+        target = max(1, min(target, est // SPREAD_MIN_BYTES_PER_TASK))
     n = scan_partition_count(df)
     if n is not None and n * 4 <= target:
         return df.repartition(target)
